@@ -497,18 +497,20 @@ def test_table_tail_streams_over_file_uri(spark, tmp_path):
     assert sorted(seen) == [(0, 0.0), (1, 1.0), (2, 2.0)]
 
 
-def test_arrow_io_stat_cache_is_directory_scoped(tmp_path):
-    """ADVICE r07 #3: _ArrowIO's listing-fed stat cache must only serve
-    hits for children of the directory it listed — a reused instance
-    that lists dir A then stats a same-named file in dir B must return
-    B's real (mtime, size), not A's cached one."""
-    from walden_spark.sources.tablestream import _ArrowIO
+def test_arrow_io_stat_cache_is_directory_scoped(tmp_path, monkeypatch):
+    """ADVICE r07 #3: the pyarrow.fs backend's listing-fed stat cache
+    must only serve hits for children of the directory it listed — a
+    reused instance that lists dir A then stats a same-named file in
+    dir B must return B's real (mtime, size), not A's cached one."""
+    from walden_spark import tablelog
 
     a, b = tmp_path / "a", tmp_path / "b"
     a.mkdir(); b.mkdir()
     (a / "f.json").write_text("x" * 10)
     (b / "f.json").write_text("y" * 999)
-    io = _ArrowIO()
+    # file:// would pick the os backend: force pyarrow through the seam
+    monkeypatch.setattr(tablelog, "io_for", lambda path, spark=None: tablelog.ArrowIO())
+    io = tablelog.io_for("file://" + str(a))
     assert io.list_names("file://" + str(a)) == ["f.json"]
     assert io.stat("file://" + str(a / "f.json"))[1] == 10   # cache hit
     assert io.stat("file://" + str(b / "f.json"))[1] == 999  # must miss

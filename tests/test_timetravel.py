@@ -3,10 +3,19 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from walden_spark import tablelog
 from walden_spark.timetravel import VersionedTable
+
+
+def _force_io(monkeypatch, make_io) -> None:
+    """Route every table-log operation through ``make_io(spark)`` — the
+    one backend-selection seam, tablelog.io_for."""
+    monkeypatch.setattr(tablelog, "io_for", lambda path, spark=None: make_io(spark))
 
 
 @pytest.fixture()
@@ -1354,6 +1363,36 @@ def test_read_changes_cdf(spark, vt):
     assert base == head
 
 
+def test_read_changes_eq_delete_run_matches_key_set(spark, tmp_path, monkeypatch):
+    """Consecutive equality deletes on the key SET (a, b), given as
+    ['a', 'b'] and then ['b', 'a'], form one run: read_changes takes
+    the batched run path and returns exactly the materialized feed."""
+    t = VersionedTable(spark, str(tmp_path / "eqrun"))
+    t.enable_cdf()
+    t.write(
+        spark.createDataFrame(
+            [(a, b, float(10 * a + b)) for a in range(4) for b in range(3)],
+            "a long, b long, v double",
+        )
+    )
+    t.delete_keys(spark.createDataFrame([(0, 1), (2, 2)], "a long, b long"), on=["a", "b"])
+    t.delete_keys(spark.createDataFrame([(0, 1), (2, 3)], "b long, a long"), on=["b", "a"])
+    runs = []
+    real = VersionedTable._eq_delete_run_changes
+
+    def spy(self, run, by_v, head_cols):
+        runs.append([m["version"] for m in run])
+        return real(self, run, by_v, head_cols)
+
+    monkeypatch.setattr(VersionedTable, "_eq_delete_run_changes", spy)
+    got = sorted(t.read_changes(0).collect())
+    assert runs == [[1, 2]]
+    assert got == sorted(t.read_cdf(0).collect())
+    assert sorted((r.a, r.b, r._change_type, r._commit_version) for r in got) == [
+        (0, 1, "delete", 1), (1, 0, "delete", 2), (2, 2, "delete", 1), (3, 2, "delete", 2),
+    ]
+
+
 def test_read_changes_upsert_and_rename_guard(spark, vt):
     vt.upsert_keys(
         spark.createDataFrame([(1, 10.0), (50, 5.0)], "id long, v double"), on=["id"]
@@ -2303,7 +2342,6 @@ def test_manifest_checkpoint_roundtrip(spark, tmp_path):
     every time-travel surface still resolves."""
     import os
 
-    from walden_spark import timetravel as tt
     from walden_spark.timetravel import VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "ckpt"))
@@ -2316,7 +2354,7 @@ def test_manifest_checkpoint_roundtrip(spark, tmp_path):
     assert len(ckpts) == 1, "auto-checkpoint must fire past the interval"
     expected = [m["version"] for m in t._manifests()]
     # fresh process: no cache, new instance — checkpoint accelerates
-    tt._MANIFEST_CACHE.clear()
+    tablelog._MANIFEST_CACHE.clear()
     fresh = VersionedTable(spark, t.path)
     assert [m["version"] for m in fresh._manifests()] == expected
     assert fresh.head("main") == expected[-1]
@@ -2331,7 +2369,6 @@ def test_manifest_checkpoint_never_resurrects_expired(spark, tmp_path):
     and expire refreshes the checkpoint over the survivors."""
     import os
 
-    from walden_spark import timetravel as tt
     from walden_spark.timetravel import VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "ckpt_exp"))
@@ -2347,7 +2384,7 @@ def test_manifest_checkpoint_never_resurrects_expired(spark, tmp_path):
     assert dropped
     live = {m["version"] for m in t._manifests()}
     assert not (set(dropped) & live)
-    tt._MANIFEST_CACHE.clear()
+    tablelog._MANIFEST_CACHE.clear()
     fresh = VersionedTable(spark, t.path)
     assert {m["version"] for m in fresh._manifests()} == live
     with pytest.raises(ValueError):
@@ -2392,7 +2429,6 @@ def test_manifest_cache_sees_rolled_back_name_recreated(spark, vt):
 def test_manifest_remote_read_path(spark, tmp_path, monkeypatch):
     """The thread-pooled JVM read path (what a real object store hits):
     force the local fast-path off and verify identical results."""
-    from walden_spark import timetravel as tt
     from walden_spark.timetravel import VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "jvmread"))
@@ -2400,19 +2436,18 @@ def test_manifest_remote_read_path(spark, tmp_path, monkeypatch):
     for i in range(1, 3):
         t.append(spark.createDataFrame([(i, float(i))], "id long, v double"))
     expected = [m["version"] for m in t._manifests()]
-    monkeypatch.setattr(tt, "_local_fs_path", lambda p: None)
-    tt._MANIFEST_CACHE.clear()
+    _force_io(monkeypatch, tablelog.HadoopIO)
+    tablelog._MANIFEST_CACHE.clear()
     fresh = VersionedTable(spark, t.path)
     assert [m["version"] for m in fresh._manifests()] == expected
     assert fresh.checkpoint() is not None
-    tt._MANIFEST_CACHE.clear()
+    tablelog._MANIFEST_CACHE.clear()
     assert [m["version"] for m in fresh._manifests()] == expected
 
 
 def test_streaming_tail_ignores_checkpoint_files(spark, tmp_path):
     """The pure-Python tail reader must not trip over checkpoint files
     in _versions, and its per-poll cache must still see new commits."""
-    from walden_spark.sources import tablestream as ts
     from walden_spark.timetravel import VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "tailckpt"))
@@ -2420,12 +2455,12 @@ def test_streaming_tail_ignores_checkpoint_files(spark, tmp_path):
     for i in range(1, 3):
         t.append(spark.createDataFrame([(i, float(i))], "id long, v double"))
     assert t.checkpoint() is not None
-    ms = ts._manifests(t.path)
+    ms = tablelog.manifests(t.path)  # no session: the tail reader's call
     assert [m["version"] for m in ms] == [0, 1, 2]
-    ms2 = ts._manifests(t.path)  # cached poll
+    ms2 = tablelog.manifests(t.path)  # cached poll
     assert [m["version"] for m in ms2] == [0, 1, 2]
     t.append(spark.createDataFrame([(9, 9.0)], "id long, v double"))
-    assert [m["version"] for m in ts._manifests(t.path)] == [0, 1, 2, 3]
+    assert [m["version"] for m in tablelog.manifests(t.path)] == [0, 1, 2, 3]
 
 
 def test_add_files_zero_copy_convert(spark, tmp_path):
@@ -2472,12 +2507,11 @@ def test_add_files_zero_copy_convert(spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == list(range(10))
 
 
-def test_tail_reader_uri_io_path(spark, tmp_path):
+def test_tail_reader_uri_io_path(spark, tmp_path, monkeypatch):
     """The streaming tail reader's pyarrow.fs IO path (what an
-    s3://-rooted table exercises), driven through file:// URIs —
+    s3://-rooted table exercises), forced onto file:// URIs —
     manifests, branch head, cdf marker, and data-file walks must all
     match the os-level fast path byte for byte."""
-    from walden_spark.sources import tablestream as ts
     from walden_spark.timetravel import VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "uriio"))
@@ -2486,19 +2520,63 @@ def test_tail_reader_uri_io_path(spark, tmp_path):
     t.append(spark.createDataFrame([(2, 2.0)], "id long, v double"))
     assert t.checkpoint() is not None
     uri = "file://" + t.path
-    local_ms = ts._manifests(t.path)
-    uri_ms = ts._manifests(uri)
+    local_ms = tablelog.manifests(t.path)
+    local_files = tablelog.walk_parquet(local_ms[-1]["data_dir"])
+    _force_io(monkeypatch, lambda spark: tablelog.ArrowIO())
+    tablelog._MANIFEST_CACHE.clear()
+    uri_ms = tablelog.manifests(uri)
     assert [m["version"] for m in uri_ms] == [m["version"] for m in local_ms] == [0, 1]
-    assert ts._branch_head(uri, uri_ms, "main") == 1
-    assert ts._io_for(uri).isfile(f"{uri}/_cdf_enabled.json")
-    local_files = ts._data_files(local_ms[-1]["data_dir"])
-    uri_files = ts._data_files("file://" + local_ms[-1]["data_dir"])
+    refs = tablelog.read_refs(uri)
+    assert tablelog.resolve_head(refs, lambda: uri_ms, "main") == 1
+    assert tablelog.exists(f"{uri}/_cdf_enabled.json")
+    uri_files = tablelog.walk_parquet("file://" + local_ms[-1]["data_dir"])
     assert [f.rsplit("/", 1)[-1] for f in uri_files] == [
         f.rsplit("/", 1)[-1] for f in local_files
     ]
     import pyarrow.parquet as pq
 
     assert sum(pq.read_table(f).num_rows for f in uri_files) == 1
+
+
+@pytest.mark.parametrize("backend", ["os", "hadoop", "arrow"])
+def test_table_log_backend_parity(spark, tmp_path, monkeypatch, backend):
+    """One checkpointed, branched table read through each table-log
+    backend on file:// URIs — os as selected, Hadoop and pyarrow.fs
+    forced through the seam: manifests, refs, branch heads and the
+    parquet walk must all equal the bare-path reads."""
+    t = VersionedTable(spark, str(tmp_path / "parity"))
+    schema = "id long, v double"
+    t.write(spark.createDataFrame([(0, 0.0), (1, 1.0)], schema))
+    t.append(spark.createDataFrame([(2, 2.0)], schema))
+    t.create_branch("audit")
+    t.append(spark.createDataFrame([(3, 3.0)], schema), branch="audit")
+    t.create_tag("release")
+    assert t.checkpoint() is not None
+    t.append(spark.createDataFrame([(4, 4.0)], schema))  # tail past the checkpoint
+
+    def snapshot(root, data_prefix):
+        ms = tablelog.manifests(root, spark)
+        refs = tablelog.read_refs(root, spark)
+        heads = {b: tablelog.resolve_head(refs, lambda: ms, b) for b in ("main", "audit")}
+        walks = [
+            tablelog.walk_parquet(data_prefix + m["data_dir"], spark)
+            for m in ms
+            if m.get("data_dir")
+        ]
+        return ms, refs, heads, walks
+
+    expected = snapshot(t.path, "")
+    assert expected[2] == {"main": 3, "audit": 2}
+    assert tablelog.manifest_log(t.path)[1] == 2  # the checkpoint is in play
+    if backend == "hadoop":
+        _force_io(monkeypatch, tablelog.HadoopIO)
+    elif backend == "arrow":
+        _force_io(monkeypatch, lambda spark: tablelog.ArrowIO())
+    tablelog._MANIFEST_CACHE.clear()
+    ms, refs, heads, walks = snapshot("file://" + t.path, "file://")
+    assert (ms, refs, heads) == expected[:3]
+    assert walks == [["file://" + f for f in w] for w in expected[3]]
+    assert all(walks)
 
 
 def test_sql_export_and_add_files(spark, tmp_path):
@@ -2581,9 +2659,6 @@ def test_checkpoint_cache_random_ops_consistent(spark, tmp_path):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from walden_spark import timetravel as tt
-    from walden_spark.sources import tablestream as ts
-
     op = st.one_of(
         st.tuples(st.just("append"), st.integers(1, 3)),
         st.tuples(st.just("delete"), st.integers(2, 4), st.integers(0, 3)),
@@ -2624,13 +2699,13 @@ def test_checkpoint_cache_random_ops_consistent(spark, tmp_path):
             elif o[0] == "checkpoint":
                 t.checkpoint()
             elif o[0] == "cache_clear":
-                tt._MANIFEST_CACHE.clear()
-                ts._TAIL_CACHE.clear()
+                tablelog._MANIFEST_CACHE.clear()
             warm = [m["version"] for m in t._manifests()]
-            tt._MANIFEST_CACHE.clear()
+            tablelog._MANIFEST_CACHE.clear()
             fresh = VersionedTable(spark, t.path)
             assert [m["version"] for m in fresh._manifests()] == warm
-            assert [m["version"] for m in ts._manifests(t.path)] == warm
+            # the session-less read the streaming tail reader makes
+            assert [m["version"] for m in tablelog.manifests(t.path)] == warm
             got = {r.id: r.v for r in t.read(branch="main").collect()}
             assert got == model
 
@@ -2697,19 +2772,18 @@ def test_concurrent_writers_serialize_forced_jvm(spark, tmp_path, monkeypatch):
     path — every claim/manifest/ref IO runs fs.create()/fs.delete()
     via Hadoop (what hdfs:// and s3a:// deployments execute), so the
     non-os branch's serializability and its exception taxonomy
-    (Hadoop FileAlreadyExistsException → _is_commit_conflict →
+    (Hadoop FileAlreadyExistsException → FileExistsError →
     ConcurrentWriteError) are pinned, not assumed. NOTE the matching
     deployment contract in SCALING.md: on S3 this atomicity requires
     S3A conditional create (Hadoop 3.4.1+,
     fs.s3a.create.conditional.enabled=true)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from walden_spark import timetravel as tt
     from walden_spark.timetravel import ConcurrentWriteError, VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "jvmstorm"))
     t.write(spark.createDataFrame([(0, 0.0)], "id long, v double"))
-    monkeypatch.setattr(tt, "_local_fs_path", lambda p: None)
+    _force_io(monkeypatch, tablelog.HadoopIO)
     n_writers, n_batches = 3, 2
 
     def worker(w: int) -> int:
@@ -2729,7 +2803,7 @@ def test_concurrent_writers_serialize_forced_jvm(spark, tmp_path, monkeypatch):
     with ThreadPoolExecutor(max_workers=n_writers) as pool:
         assert all(r == n_batches for r in pool.map(worker, range(n_writers)))
     monkeypatch.undo()
-    tt._MANIFEST_CACHE.clear()
+    tablelog._MANIFEST_CACHE.clear()
     ids = sorted(r.id for r in t.read(branch="main").collect())
     expected = sorted(
         [0] + [1000 + w * 100 + k for w in range(n_writers) for k in range(n_batches)]
@@ -2759,12 +2833,11 @@ def test_dead_writer_repair_forced_jvm(spark, tmp_path, monkeypatch):
     """Claim-repair arms through the FORCED-JVM path: the repair's
     fs.open/exists/delete and the roll-forward _write_ref all run via
     Hadoop, mirroring test_dead_writer_claim_rolled_forward."""
-    from walden_spark import timetravel as tt
     from walden_spark.timetravel import ConcurrentWriteError, VersionedTable
 
     t = VersionedTable(spark, str(tmp_path / "jvmrepair"))
     t.write(spark.createDataFrame([(0, 0.0)], "id long, v double"))
-    monkeypatch.setattr(tt, "_local_fs_path", lambda p: None)
+    _force_io(monkeypatch, tablelog.HadoopIO)
     dead = VersionedTable(spark, t.path)
 
     def dying(ref_type, name, version, overwrite):
@@ -2782,7 +2855,7 @@ def test_dead_writer_repair_forced_jvm(spark, tmp_path, monkeypatch):
     v = vt.append(spark.createDataFrame([(60, 6.0)], "id long, v double"))
     assert vt.head("main") == v
     monkeypatch.undo()
-    tt._MANIFEST_CACHE.clear()
+    tablelog._MANIFEST_CACHE.clear()
     assert sorted(
         r.id for r in t.read(branch="main").filter("id >= 50").collect()
     ) == [50, 60]
@@ -3124,20 +3197,17 @@ def test_claim_heartbeat_resets_repair_clock(spark, vt, monkeypatch):
     # claim whose `to` manifest doesn't exist: a stale one is RELEASED
     # by the repairer (the roll-forward arm needs the manifest)
     claim = vt._cas_claim("main", head, 9999)
-    fs, cp, _ = __import__("walden_spark.timetravel", fromlist=["_fs"])._fs(
-        vt.spark, claim
-    )
     _time.sleep(0.3)
     vt._claim_heartbeat(claim)  # owner is alive: refresh
     rival = VersionedTable(spark, vt.path)
     assert rival._repair_stale_claim("main", head, claim) is False
-    assert fs.exists(cp), "heartbeated claim must survive the repairer"
+    assert os.path.exists(claim), "heartbeated claim must survive the repairer"
     _time.sleep(0.3)  # now let it genuinely go stale: repair releases
     assert rival._repair_stale_claim("main", head, claim) is True
-    assert not fs.exists(cp)
+    assert not os.path.exists(claim)
     # heartbeat on a vanished claim is a no-op, not an error
     vt._claim_heartbeat(claim)
-    assert not fs.exists(cp)
+    assert not os.path.exists(claim)
 
 
 def test_claim_heartbeat_cannot_resurrect_or_clobber(spark, vt, monkeypatch):
@@ -3146,51 +3216,31 @@ def test_claim_heartbeat_cannot_resurrect_or_clobber(spark, vt, monkeypatch):
     owner's heartbeat must be a no-op — it may neither resurrect its
     deleted claim nor refresh/clobber the rival's — and the original
     owner's merge publish re-check must abort on the token mismatch."""
-    import json as _json
     import time as _time
 
-    from walden_spark.timetravel import VersionedTable, _fs
+    from walden_spark.timetravel import VersionedTable
 
     monkeypatch.setattr(VersionedTable, "CLAIM_REPAIR_AGE_S", 0.2)
     head = vt.head("main")
     claim = vt._cas_claim("main", head, 9999)
-    fs, cp, jvm = _fs(spark, claim)
     _time.sleep(0.3)  # owner stalls past the repair age
     repairer = VersionedTable(spark, vt.path)
     assert repairer._repair_stale_claim("main", head, claim) is True
-    assert not fs.exists(cp)
+    assert not os.path.exists(claim)
     # heartbeat on the raided (deleted) claim must NOT resurrect it
     vt._claim_heartbeat(claim)
-    assert not fs.exists(cp), "heartbeat resurrected a raided claim"
+    assert not os.path.exists(claim), "heartbeat resurrected a raided claim"
     # a rival re-claims the same transition
     rival = VersionedTable(spark, vt.path)
     rival_claim = rival._cas_claim("main", head, 9999)
     assert rival_claim == claim  # same slot, new owner token
     # the original owner's heartbeat must leave the rival's claim alone
     vt._claim_heartbeat(claim)
-    stream = fs.open(cp)
-    try:
-        payload = _json.loads(
-            bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode(
-                "utf-8"
-            )
-        )
-    finally:
-        stream.close()
+    payload = tablelog.read_json(claim)
     assert payload["owner"] == rival._owned_claims[rival_claim]
     assert payload["owner"] != vt._owned_claims[claim]
-    hb_path = jvm.org.apache.hadoop.fs.Path(claim + ".hb")
-    if fs.exists(hb_path):  # any sidecar present must not be the old owner's
-        hstream = fs.open(hb_path)
-        try:
-            hb = _json.loads(
-                bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(hstream)
-                ).decode("utf-8")
-            )
-        finally:
-            hstream.close()
-        assert hb["owner"] != vt._owned_claims[claim]
+    if os.path.exists(claim + ".hb"):  # any sidecar must not be the old owner's
+        assert tablelog.read_json(claim + ".hb")["owner"] != vt._owned_claims[claim]
 
 
 def test_jvm_path_heartbeat_storm_never_raided(spark, tmp_path, monkeypatch):
@@ -3209,7 +3259,7 @@ def test_jvm_path_heartbeat_storm_never_raided(spark, tmp_path, monkeypatch):
 
     t = VersionedTable(spark, str(tmp_path / "jvmheartbeat"))
     t.write(spark.createDataFrame([(0, 0.0)], "id long, v double"))
-    monkeypatch.setattr(tt, "_local_fs_path", lambda p: None)
+    _force_io(monkeypatch, tablelog.HadoopIO)
     # age >> heartbeat interval: the protocol's liveness guarantee is
     # "no raid while heartbeats land inside the age", and the age must
     # absorb heartbeat-call stalls (each heartbeat is two py4j round
@@ -3247,8 +3297,7 @@ def test_jvm_path_heartbeat_storm_never_raided(spark, tmp_path, monkeypatch):
         th.join(timeout=10)
     assert len(raids) >= 20, "repairer must actually have hammered"
     assert not any(raids), "a live heartbeated claim was raided on the JVM path"
-    fs, cp, _ = tt._fs(spark, claim)
-    assert fs.exists(cp)
+    assert tablelog.exists(claim, spark)  # through the forced Hadoop backend
     owner._cas_release(claim)
 
 
@@ -3259,12 +3308,11 @@ def test_torn_heartbeat_sidecar_reads_as_live(spark, vt, monkeypatch):
     CLAIM file (torn read) is likewise live, not vanished."""
     import time as _time
 
-    from walden_spark.timetravel import VersionedTable, _fs
+    from walden_spark.timetravel import VersionedTable
 
     monkeypatch.setattr(VersionedTable, "CLAIM_REPAIR_AGE_S", 0.2)
     head = vt.head("main")
     claim = vt._cas_claim("main", head, 9999)
-    fs, cp, jvm = _fs(spark, claim)
     _time.sleep(0.3)  # aged past the repair horizon
     # torn sidecar: half-written JSON (what a truncate-then-write
     # fs.create(overwrite=true) exposes mid-heartbeat)
@@ -3273,7 +3321,7 @@ def test_torn_heartbeat_sidecar_reads_as_live(spark, vt, monkeypatch):
         f.write('{"owner": "abc", "clai')
     rival = VersionedTable(spark, vt.path)
     assert rival._repair_stale_claim("main", head, claim) is False
-    assert fs.exists(cp), "repairer raided a claim with an in-flight heartbeat"
+    assert os.path.exists(claim), "repairer raided a claim with an in-flight heartbeat"
     # torn CLAIM file: present but unparsable — live, not free
     import os as _os
 
@@ -3281,7 +3329,7 @@ def test_torn_heartbeat_sidecar_reads_as_live(spark, vt, monkeypatch):
     with open(claim, "w", encoding="utf-8") as f:
         f.write('{"to": 9999, "claim')
     assert rival._repair_stale_claim("main", head, claim) is False
-    assert fs.exists(cp)
+    assert os.path.exists(claim)
     # restore a well-formed stale claim: now the raid legitimately fires
     vt._write_json(
         claim,
@@ -3289,7 +3337,7 @@ def test_torn_heartbeat_sidecar_reads_as_live(spark, vt, monkeypatch):
         overwrite=True,
     )
     assert rival._repair_stale_claim("main", head, claim) is True
-    assert not fs.exists(cp)
+    assert not os.path.exists(claim)
 
 
 def test_permanently_torn_sidecar_or_claim_eventually_repairs(spark, vt, monkeypatch):
@@ -3302,14 +3350,13 @@ def test_permanently_torn_sidecar_or_claim_eventually_repairs(spark, vt, monkeyp
     import os as _os
     import time as _time
 
-    from walden_spark.timetravel import VersionedTable, _fs
+    from walden_spark.timetravel import VersionedTable
 
     monkeypatch.setattr(VersionedTable, "CLAIM_REPAIR_AGE_S", 0.2)
     head = vt.head("main")
     rival = VersionedTable(spark, vt.path)
     # --- arm 1: permanently torn SIDECAR on an aged claim ---
     claim = vt._cas_claim("main", head, 9999)
-    fs, cp, jvm = _fs(spark, claim)
     _time.sleep(0.3)  # claim itself aged past the horizon
     local_hb = claim + ".hb"
     with open(local_hb, "w", encoding="utf-8") as f:
@@ -3319,18 +3366,17 @@ def test_permanently_torn_sidecar_or_claim_eventually_repairs(spark, vt, monkeyp
     old = _time.time() - 10
     _os.utime(local_hb, (old, old))  # now it's been torn for 10 s
     assert rival._repair_stale_claim("main", head, claim) is True
-    assert not fs.exists(cp), "aged torn sidecar must not wedge the slot"
-    assert not fs.exists(jvm.org.apache.hadoop.fs.Path(local_hb))
+    assert not _os.path.exists(claim), "aged torn sidecar must not wedge the slot"
+    assert not _os.path.exists(local_hb)
     # --- arm 2: permanently torn CLAIM file ---
     claim2 = vt._cas_claim("main", head, 9999)
-    fs2, cp2, _ = _fs(spark, claim2)
     with open(claim2, "w", encoding="utf-8") as f:
         f.write('{"to": 9999, "claim')  # crash mid-create
     # fresh torn claim: in-flight grace
     assert rival._repair_stale_claim("main", head, claim2) is False
     _os.utime(claim2, (old, old))
     assert rival._repair_stale_claim("main", head, claim2) is True
-    assert not fs2.exists(cp2), "aged torn claim must not wedge the slot"
+    assert not _os.path.exists(claim2), "aged torn claim must not wedge the slot"
     # the freed slot is genuinely claimable again
     claim3 = rival._cas_claim("main", head, 9999)
     assert claim3 == claim2

@@ -19,7 +19,7 @@ has. Probed per N ∈ {100, 1000}:
   warm          _manifests() with warm cache (steady-state poll cost:
                 1 listing + 0 reads)
   poll-x100     100 streaming latestOffset-style polls
-                (sources/tablestream._manifests + head resolution)
+                (session-less tablelog.manifests + head resolution)
   head          VersionedTable.head('main')
 
     python tools/metadata_probe.py
@@ -46,8 +46,7 @@ def timed(fn, reps: int = 1) -> float:
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    from walden_spark import timetravel as tt
-    from walden_spark.sources import tablestream as ts
+    from walden_spark import tablelog
     from walden_spark.timetravel import VersionedTable
 
     spark = (
@@ -82,26 +81,27 @@ def main() -> None:
         t._write_ref("branch", "main", n_commits - 1, overwrite=True)
 
         def cold_nockpt():
-            tt._MANIFEST_CACHE.clear()
+            tablelog._MANIFEST_CACHE.clear()
             assert len(t._manifests()) == n_commits
 
         def cold_ckpt():
-            tt._MANIFEST_CACHE.clear()
+            tablelog._MANIFEST_CACHE.clear()
             assert len(t._manifests()) == n_commits
 
         def warm():
             assert len(t._manifests()) == n_commits
 
         def poll():
-            ms = ts._manifests(t.path)
-            assert ts._branch_head(t.path, ms, "main") == n_commits - 1
+            ms = tablelog.manifests(t.path)
+            refs = tablelog.read_refs(t.path)
+            assert tablelog.resolve_head(refs, lambda: ms, "main") == n_commits - 1
 
         r = {"commits": n_commits}
         r["cold_nockpt_s"] = timed(cold_nockpt, reps=3)
         assert t.checkpoint() is not None
         r["cold_ckpt_s"] = timed(cold_ckpt, reps=3)
         r["warm_s"] = timed(warm, reps=10)
-        ts._TAIL_CACHE.clear()
+        tablelog._MANIFEST_CACHE.clear()
         r["poll_x100_s"] = timed(lambda: [poll() for _ in range(100)])
         r["head_s"] = timed(lambda: t.head("main"), reps=10)
         rows.append(r)
@@ -152,7 +152,7 @@ def main() -> None:
         }
 
         def cold_ckpt_files():
-            tt._MANIFEST_CACHE.clear()
+            tablelog._MANIFEST_CACHE.clear()
             assert len(t._manifests()) == n_commits
 
         def warm_files():

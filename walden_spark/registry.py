@@ -82,7 +82,7 @@ def query(name: str, oracle: Optional[str] = None, category: str = "", tags: tup
 # tools/rotation_queue.py::window_guard_violations) uses it to stay
 # green at the round boundary, and as of r09 the boundary arm demands
 # FULL green (rows+schema+hash), not merely err-free.
-DRIVER_WINDOW_ROUND = 15
+DRIVER_WINDOW_ROUND = 16
 
 # Queries whose EXECUTION changed in r14/r15 with no driver witness on
 # the changed body (VERDICT r14 "what's wrong" #1). r14 rewrites:
@@ -98,6 +98,14 @@ DRIVER_WINDOW_ROUND = 15
 # sizing (all bounded replays), batched eq-delete-run CDF pre-images
 # (read_changes: ddl/streaming change-feed + incremental MVs), and the
 # pruned multimodal decode boundary.
+#
+# Cut for r16: the table-log refactor (walden_spark/tablelog.py) moved
+# every versioned-table metadata read/write; its window witnesses are
+# the change-feed / incremental-MV / streaming-tail names already here
+# plus ddl_maintenance_lifecycle (restore, compact, expire, orphan
+# sweep) and ddl_catalog_refs (catalog refs, views, merges). Two
+# pattern-matcher names, fully green in CORRECTNESS_r15.json and
+# untouched since, rotated out to keep the window at 50.
 DRIVER_WINDOW_BODY_CHANGED: tuple[str, ...] = (
     "tpch_q10",
     "tpch_q13",
@@ -119,8 +127,6 @@ DRIVER_WINDOW_BODY_CHANGED: tuple[str, ...] = (
     "streaming_stateful_timeout_sessions",
     "streaming_pattern_vshape",
     "streaming_pattern_skip_next",
-    "streaming_pattern_alternation",
-    "streaming_pattern_mixed_define",
     "streaming_pattern_same_class",
     "streaming_anomaly_weekly",
     "streaming_tumbling",
@@ -140,6 +146,8 @@ DRIVER_WINDOW_BODY_CHANGED: tuple[str, ...] = (
     "multimodal_decode",
     "multimodal_resize",
     "multimodal_frame_sample",
+    "ddl_maintenance_lifecycle",
+    "ddl_catalog_refs",
 )
 
 DRIVER_WINDOW: tuple[str, ...] = DRIVER_WINDOW_BODY_CHANGED + (
