@@ -448,6 +448,41 @@ def test_equality_delete_keys(spark, vt):
     assert got == [4, 5, 6, 7, 8, 9]
     with pytest.raises(ValueError, match="not in table schema"):
         vt.delete_keys(spark.createDataFrame([(1,)], "nope long"), on=["nope"])
+    # composite key passed in reverse column order: the snapshot keeps
+    # the table's column order (the key join must not reorder it)
+    t = VersionedTable(spark, str(vt.path) + "_ab")
+    t.write(
+        spark.createDataFrame(
+            [(i, i % 3, float(i)) for i in range(9)], "a long, b long, v double"
+        )
+    )
+    t.delete_keys(spark.createDataFrame([(1, 1), (2, 5)], "b long, a long"), on=["b", "a"])
+    assert t.read().columns == ["a", "b", "v"]
+    assert sorted(r.a for r in t.read().collect()) == [0, 2, 3, 4, 6, 7, 8]
+    assert t.scan(filters=[("a", ">=", 4)]).columns == ["a", "b", "v"]
+
+
+def test_default_read_follows_main_not_side_branches(spark, vt):
+    """With no ref, read(), current_version() and merge_into resolve
+    MAIN's head: a newer commit on a side branch stays unpublished to
+    main until merged."""
+    main_v = vt.head("main")
+    vt.create_branch("audit")
+    audit_v = vt.append(
+        spark.createDataFrame([(100, 100.0)], "id long, v double"), branch="audit"
+    )
+    assert audit_v > main_v and vt.head("main") == main_v
+    assert vt.current_version() == main_v
+    assert sorted(r.id for r in vt.read().collect()) == list(range(10))
+    assert vt.scan().count() == 10
+    v = vt.merge_into(
+        spark.createDataFrame([(1, -1.0), (200, 2.0)], "id long, v double"), on=["id"]
+    )
+    assert vt.head("main") == v and vt.current_version() == v
+    cur = {r.id: r.v for r in vt.read().collect()}
+    assert 100 not in cur  # the audit row never leaked into main
+    assert cur[1] == -1.0 and cur[200] == 2.0 and len(cur) == 11
+    assert 100 in {r.id for r in vt.read(branch="audit").collect()}
 
 
 def test_position_delete(spark, tmp_path):
@@ -1627,8 +1662,11 @@ def test_cdf_files_match_computed_changes_random_ops(spark, tmp_path):
     """Property: for ANY op sequence on a cdf-enabled table, the
     MATERIALIZED change feed (read_cdf — files staged at commit time)
     is multiset-equal to the COMPUTED one (read_changes — replayed from
-    layer semantics) over every commit range both can serve."""
-    from hypothesis import HealthCheck, given, settings
+    layer semantics) over every commit range both can serve. Inputs
+    include full-snapshot restores to v0 (restore's own exceptAll diff)
+    and a two-column-key table whose deletes and upserts name the key
+    in reverse column order."""
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     op = st.one_of(
@@ -1637,6 +1675,7 @@ def test_cdf_files_match_computed_changes_random_ops(spark, tmp_path):
         st.tuples(st.just("upsert"), st.lists(st.integers(0, 30), min_size=1, max_size=3)),
         st.tuples(st.just("pdelete"), st.integers(0, 20)),
         st.tuples(st.just("rewrite"), st.integers(1, 9)),
+        st.tuples(st.just("restore"), st.just(0)),
     )
     counter = [0]
 
@@ -1645,36 +1684,38 @@ def test_cdf_files_match_computed_changes_random_ops(spark, tmp_path):
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    @given(ops=st.lists(op, min_size=1, max_size=4))
-    def run(ops):
+    @given(ops=st.lists(op, min_size=1, max_size=4), two_key=st.booleans())
+    @example(ops=[("delete", [1, 2]), ("restore", 0), ("upsert", [2, 3])], two_key=True)
+    def run(ops, two_key):
         counter[0] += 1
         t = VersionedTable(spark, str(tmp_path / f"cdfeq{counter[0]}"))
         t.enable_cdf()
-        t.write(
-            spark.createDataFrame(
-                [(i, float(i)) for i in range(30)], "id long, v double"
+        # two-key table: key (id, g), always passed as on=["g", "id"]
+        schema = "id long, g long, v double" if two_key else "id long, v double"
+        on = ["g", "id"] if two_key else ["id"]
+
+        def rows(pairs):
+            return spark.createDataFrame(
+                [(i, i % 3, v) if two_key else (i, v) for i, v in pairs], schema
             )
-        )
+
+        def keys(ids):
+            return rows((k, 0.0) for k in set(ids)).select(*on)
+
+        t.write(rows((i, float(i)) for i in range(30)))
         fresh = [500]
         for kind, arg in ops:
             if kind == "append":
                 fresh[0] += 1
-                rows = [(fresh[0] * 100 + j, float(k)) for j, k in enumerate(arg)]
-                t.append(spark.createDataFrame(rows, "id long, v double"))
+                t.append(rows((fresh[0] * 100 + j, float(k)) for j, k in enumerate(arg)))
             elif kind == "delete":
-                t.delete_keys(
-                    spark.createDataFrame([(k,) for k in set(arg)], "id long"),
-                    on=["id"],
-                )
+                t.delete_keys(keys(arg), on=on)
             elif kind == "upsert":
-                t.upsert_keys(
-                    spark.createDataFrame(
-                        [(k, float(k) + 0.5) for k in set(arg)], "id long, v double"
-                    ),
-                    on=["id"],
-                )
+                t.upsert_keys(rows((k, float(k) + 0.5) for k in set(arg)), on=on)
             elif kind == "pdelete":
                 t.delete_where(f"id % 7 = {arg % 7}", mode="mor")
+            elif kind == "restore":
+                t.restore(arg)
             else:
                 t.write(
                     t.read().filter(f"id % 11 <> {arg}"), operation="rewrite"

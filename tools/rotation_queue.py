@@ -143,8 +143,11 @@ def changed_def_names(repo_root: str = REPO, ref: str | None = None) -> set[str]
         capture_output=True,
         text=True,
     )
+    if res.returncode != 0:
+        # a failed diff must not read as "nothing changed"
+        raise RuntimeError(f"git diff against {ref} failed: {res.stderr.strip()}")
     changed: set[tuple[str, str]] = set()
-    for f in res.stdout.split():
+    for f in res.stdout.splitlines():
         if not f.endswith(".py"):
             continue
         mod = f[:-3].replace("/", ".")

@@ -652,10 +652,11 @@ class WaldenSession:
             name = m.group(1)
             vt = self._versioned[name]
             df = self.spark.sql(m.group(2))
-            tbl_cols = vt.read().columns
+            branch = self._dml_branch(name)
+            tbl_cols = vt.read(branch=branch).columns
             if df.columns != tbl_cols and len(df.columns) == len(tbl_cols):
                 df = df.toDF(*tbl_cols)  # VALUES yields col1..colN — positional
-            v = vt.append(df, branch=self._dml_branch(name))
+            v = vt.append(df, branch=branch)
             self._refresh_versioned(name)
             return self.spark.createDataFrame([(name, v)], "table string, version bigint")
         m = self._DDL_RENAME_RE.match(query)

@@ -17,7 +17,14 @@ fans out across the cluster like any batch scan.
 Non-append commits (deletes, upserts, rewrites) cannot be expressed
 as an append stream; like Iceberg's `streaming-skip-delete-snapshots`
 default, the source raises — set ``skipNonAppend=true`` to skip those
-versions explicitly (downstream then sees inserts only).
+versions explicitly (downstream then sees inserts only). The
+``walden_table_changes`` source streams every commit kind of a
+CDF-enabled table instead: each commit's rows come from the files its
+commit staged (``VersionedTable._stage_cdf``, rows derived by
+``VersionedTable._commit_changes``), picked by
+:func:`walden_spark.tablelog.change_dirs` — the same per-version rule
+``read_cdf`` reads by. Both sources share one reader base: version
+offsets, branch-lineage commit selection, and a bind-by-name ``read``.
 
 Storage: planning runs in py4j-less Python workers, so manifest
 listing, ref resolution (with its torn-read retry), branch heads,
@@ -40,33 +47,15 @@ from walden_spark import tablelog
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str):
+    """One parquet file of a micro-batch; ``consts`` are the values of
+    declared columns stamped onto every row instead of read from the
+    file (the change stream's ``_change_type`` for files served
+    straight from a commit's data dir, and ``_commit_version``). An
+    empty ``path`` is an empty batch."""
+
+    def __init__(self, path: str, consts: dict | None = None):
         self.path = path
-
-
-class _ChangeFilePartition(InputPartition):
-    """One parquet file of a change micro-batch. ``change_type`` is the
-    constant to stamp ('insert' for files served straight from a
-    commit's data dir); None means the file carries its own
-    ``_change_type`` column (a staged CDF file)."""
-
-    def __init__(self, path: str, change_type: str | None, version: int):
-        self.path = path
-        self.change_type = change_type
-        self.version = version
-
-
-def _latest_offset(path: str, branch: str, from_version: int) -> dict:
-    # the BRANCH head, never the newest manifest on any branch: a WAP
-    # audit branch or a transaction's staging branch commits manifests
-    # too, and those must not leak unpublished rows into the stream
-    # (ADVICE r05 #2). Offsets stay monotonic because branch heads only
-    # move to strictly newer versions.
-    head = tablelog.resolve_head(
-        tablelog.read_refs(path), lambda: tablelog.manifests(path), branch
-    )
-    v = head if head is not None else from_version
-    return {"version": max(v, from_version)}
+        self.consts = consts or {}
 
 
 _ARROW_TO_SPARK = {
@@ -86,31 +75,96 @@ def _spark_type(arrow_type) -> str:
     raise ValueError(f"unsupported column type for table tail: {s}")
 
 
-class _TableTailReader(DataSourceStreamReader):
+def _head_schema(path: str) -> str:
+    """DDL of the table's head columns, from the LAST data manifest's
+    first file — so a stream started after a rename/evolution serves
+    the current column names. Hidden partition fields are left out."""
+    import pyarrow.parquet as pq
+
+    ms = tablelog.manifests(path)
+    if not ms:
+        raise ValueError(f"no versions at {path}")
+    with_data = [m for m in ms if m.get("data_dir")]
+    sch = pq.read_schema(tablelog.walk_parquet(with_data[-1]["data_dir"])[0])
+    return ", ".join(
+        f"`{name}` {_spark_type(sch.field(name).type)}"
+        for name in sch.names
+        if not name.startswith("walden_p_")
+    )
+
+
+class _VersionStreamReader(DataSourceStreamReader):
+    """Offsets are TABLE VERSIONS on one branch; each subclass maps the
+    commits of a micro-batch to parquet files. Rows bind BY NAME."""
+
     def __init__(self, options, schema_names):
         self.schema_names = list(schema_names)
         self.path = options["path"]
         self.branch = options.get("branch", "main")
         self.from_version = int(options.get("fromVersion", -1))
-        self.skip_non_append = (
-            str(options.get("skipNonAppend", "false")).lower() == "true"
-        )
 
     def initialOffset(self):
         return {"version": self.from_version}
 
     def latestOffset(self):
-        return _latest_offset(self.path, self.branch, self.from_version)
+        # the BRANCH head, never the newest manifest on any branch: a
+        # WAP audit branch or a transaction's staging branch commits
+        # manifests too, and those must not leak unpublished rows into
+        # the stream (ADVICE r05 #2). Offsets stay monotonic because
+        # branch heads only move to strictly newer versions.
+        head = tablelog.resolve_head(
+            tablelog.read_refs(self.path),
+            lambda: tablelog.manifests(self.path),
+            self.branch,
+        )
+        v = head if head is not None else self.from_version
+        return {"version": max(v, self.from_version)}
 
-    def partitions(self, start, end):
+    def _commits(self, start, end) -> list[dict]:
+        """Manifests of the branch lineage in ``(start, end]``, oldest
+        first."""
         lo, hi = start["version"], end["version"]
         ms = tablelog.manifests(self.path)
         on_branch = tablelog.lineage(ms, hi if hi >= 0 else None)
+        return [m for m in ms if lo < m["version"] <= hi and m["version"] in on_branch]
+
+    def read(self, partition: _FilePartition):
+        if not partition.path:
+            return iter(())
+        import pyarrow.parquet as pq
+
+        table = pq.read_table(partition.path)
+        # arrow → python tuples, executor-side, one file per task;
+        # bind BY NAME against the declared stream schema so file
+        # column order never matters and columns added by later schema
+        # evolution surface as None in older files
+        n = table.num_rows
+        names = set(table.schema.names)
+        cols = [
+            [partition.consts[name]] * n
+            if name in partition.consts
+            else table.column(name).to_pylist()
+            if name in names
+            else [None] * n
+            for name in self.schema_names
+        ]
+        return iter(list(zip(*cols))) if cols else iter(())
+
+    def commit(self, end):
+        pass  # offsets are table versions; nothing to clean up
+
+
+class _TableTailReader(_VersionStreamReader):
+    def __init__(self, options, schema_names):
+        super().__init__(options, schema_names)
+        self.skip_non_append = (
+            str(options.get("skipNonAppend", "false")).lower() == "true"
+        )
+
+    def partitions(self, start, end):
         parts: list[_FilePartition] = []
-        for m in ms:
+        for m in self._commits(start, end):
             v = m["version"]
-            if v <= lo or v > hi or v not in on_branch:
-                continue
             if m.get("rename"):
                 # a schema change breaks the declared stream schema —
                 # rows after it would bind to the wrong column names,
@@ -121,7 +175,7 @@ class _TableTailReader(DataSourceStreamReader):
                     "fixed at stream start — restart with fromVersion="
                     f"{v} to continue under the new schema"
                 )
-            if v == 0 and lo == -1:
+            if v == 0 and start["version"] == -1:
                 pass  # base snapshot streams as the initial batch
             elif not (m.get("mor") and m.get("operation") == "append"):
                 if self.skip_non_append:
@@ -139,27 +193,6 @@ class _TableTailReader(DataSourceStreamReader):
         # batch is a partition that yields no rows
         return parts or [_FilePartition("")]
 
-    def read(self, partition: _FilePartition):
-        if not partition.path:
-            return iter(())
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.path)
-        # arrow → python tuples, executor-side, one file per task;
-        # bind BY NAME against the declared stream schema so file
-        # column order never matters and columns added by later schema
-        # evolution surface as None in older files
-        n = table.num_rows
-        names = set(table.schema.names)
-        cols = [
-            table.column(name).to_pylist() if name in names else [None] * n
-            for name in self.schema_names
-        ]
-        return iter(list(zip(*cols))) if cols else iter(())
-
-    def commit(self, end):
-        pass  # offsets are table versions; nothing to clean up
-
 
 class WaldenTableTailDataSource(DataSource):
     """``spark.readStream.format("walden_table_tail")
@@ -171,101 +204,34 @@ class WaldenTableTailDataSource(DataSource):
         return "walden_table_tail"
 
     def schema(self) -> str:
-        import pyarrow.parquet as pq
-
-        ms = tablelog.manifests(self.options["path"])
-        if not ms:
-            raise ValueError(f"no versions at {self.options['path']}")
-        # LAST data manifest: the head schema, so a tail started after
-        # a rename/evolution serves the current column names
-        with_data = [m for m in ms if m.get("data_dir")]
-        f = tablelog.walk_parquet(with_data[-1]["data_dir"])[0]
-        sch = pq.read_schema(f)
-        return ", ".join(
-            f"`{name}` {_spark_type(sch.field(name).type)}" for name in sch.names
-        )
+        return _head_schema(self.options["path"])
 
     def streamReader(self, schema) -> DataSourceStreamReader:
         return _TableTailReader(self.options, schema.fieldNames())
 
 
-class _TableChangesReader(DataSourceStreamReader):
+class _TableChangesReader(_VersionStreamReader):
     """Streams a cdf-enabled VersionedTable's CHANGE ROWS — every
     commit kind, not just appends (the Delta CDF-streaming surface the
-    append tail can't express). Inserts of append/upsert commits are
-    served straight from the commit's own data files; deletes, update
-    pre-images, and rewrite diffs come from the CDF file the commit
-    staged under its manifest claim (timetravel.py::_stage_cdf)."""
-
-    def __init__(self, options, schema_names):
-        # last two declared fields are _change_type/_commit_version
-        self.schema_names = list(schema_names)
-        self.data_names = [
-            n for n in self.schema_names
-            if n not in ("_change_type", "_commit_version")
-        ]
-        self.path = options["path"]
-        self.branch = options.get("branch", "main")
-        self.from_version = int(options.get("fromVersion", -1))
-
-    def initialOffset(self):
-        return {"version": self.from_version}
-
-    def latestOffset(self):
-        return _latest_offset(self.path, self.branch, self.from_version)
+    append tail can't express). Each commit's files come from
+    :func:`tablelog.change_dirs`, the rule ``read_cdf`` reads by:
+    inserts of append/upsert commits straight from the commit's own
+    data files, deletes, update pre-images and rewrite diffs from the
+    CDF file the commit staged under its manifest claim
+    (timetravel.py::_stage_cdf, rows derived by ``_commit_changes``)."""
 
     def partitions(self, start, end):
-        lo, hi = start["version"], end["version"]
-        ms = tablelog.manifests(self.path)
-        on_branch = tablelog.lineage(ms, hi if hi >= 0 else None)
-        parts: list[_ChangeFilePartition] = []
-        for m in ms:
-            v = m["version"]
-            if v <= lo or v > hi or v not in on_branch:
-                continue
-            cdf = m.get("cdf")
-            if cdf is None:
-                # committed before enable_cdf(): no change rows exist.
-                # Refuse rather than silently drop changes — restart
-                # with fromVersion at or past the enable point.
-                raise ValueError(
-                    f"version {v} carries no change-data files (committed "
-                    "before enable_cdf()); start the stream with "
-                    f"fromVersion={v}"
-                )
-            if cdf.get("appends") and m.get("data_dir"):
-                parts.extend(
-                    _ChangeFilePartition(p, "insert", v)
-                    for p in tablelog.walk_parquet(m["data_dir"])
-                )
-            if cdf.get("dir"):
-                parts.extend(
-                    _ChangeFilePartition(p, None, v)
-                    for p in tablelog.walk_parquet(cdf["dir"])
-                )
-        return parts or [_ChangeFilePartition("", None, -1)]
-
-    def read(self, partition: _ChangeFilePartition):
-        if not partition.path:
-            return iter(())
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.path)
-        n = table.num_rows
-        names = set(table.schema.names)
-        cols = [
-            table.column(name).to_pylist() if name in names else [None] * n
-            for name in self.data_names
+        parts = [
+            _FilePartition(
+                p,
+                {"_commit_version": m["version"]}
+                | ({"_change_type": ct} if ct is not None else {}),
+            )
+            for m in self._commits(start, end)
+            for d, ct in tablelog.change_dirs(m)
+            for p in tablelog.walk_parquet(d)
         ]
-        if partition.change_type is not None:
-            ct = [partition.change_type] * n
-        else:
-            ct = table.column("_change_type").to_pylist()
-        cv = [partition.version] * n
-        return iter(list(zip(*cols, ct, cv)))
-
-    def commit(self, end):
-        pass
+        return parts or [_FilePartition("")]
 
 
 class WaldenTableChangesDataSource(DataSource):
@@ -278,25 +244,12 @@ class WaldenTableChangesDataSource(DataSource):
         return "walden_table_changes"
 
     def schema(self) -> str:
-        import pyarrow.parquet as pq
-
         path = self.options["path"]
         if not tablelog.exists(f"{path.rstrip('/')}/_cdf_enabled.json"):
             raise ValueError(
                 f"table at {path} is not CDF-enabled; call enable_cdf() first"
             )
-        ms = tablelog.manifests(path)
-        if not ms:
-            raise ValueError(f"no versions at {path}")
-        with_data = [m for m in ms if m.get("data_dir")]
-        f = tablelog.walk_parquet(with_data[-1]["data_dir"])[0]
-        sch = pq.read_schema(f)
-        cols = ", ".join(
-            f"`{name}` {_spark_type(sch.field(name).type)}"
-            for name in sch.names
-            if not name.startswith("walden_p_")  # hidden partition fields
-        )
-        return cols + ", `_change_type` string, `_commit_version` long"
+        return _head_schema(path) + ", `_change_type` string, `_commit_version` long"
 
     def streamReader(self, schema) -> DataSourceStreamReader:
         return _TableChangesReader(self.options, schema.fieldNames())

@@ -633,3 +633,29 @@ def lineage(ms: Iterable[dict], head: int | None) -> set[int]:
         seen.add(head)
         head = parent_of(by_v[head])
     return seen
+
+
+# ---- change-data files ----
+
+
+def change_dirs(manifest: dict) -> list[tuple[str, str | None]]:
+    """``(parquet dir, change type)`` pairs serving one commit's change
+    rows on a CDF-enabled table: its own data dir stamped 'insert' when
+    the data files ARE its inserts, and its staged CDF dir (change type
+    None — each row carries its own ``_change_type``). A commit made
+    before ``enable_cdf()`` staged nothing, so it is refused rather
+    than silently read as changing no rows."""
+    v = manifest["version"]
+    cdf = manifest.get("cdf")
+    if cdf is None:
+        raise ValueError(
+            f"version {v} carries no change-data files (committed before "
+            f"enable_cdf()); start past it (from version {v}) or compute "
+            "the range with read_changes()"
+        )
+    out: list[tuple[str, str | None]] = []
+    if cdf.get("appends") and manifest.get("data_dir"):
+        out.append((manifest["data_dir"], "insert"))
+    if cdf.get("dir"):
+        out.append((cdf["dir"], None))
+    return out

@@ -789,10 +789,11 @@ class VersionedTable:
         )
 
     def current_version(self) -> int:
-        ms = self._manifests()
-        if not ms:
+        """Main's head version."""
+        v = self.head("main")
+        if v is None:
             raise FileNotFoundError(f"no versions at {self.path}")
-        return ms[-1]["version"]
+        return v
 
     _HIDDEN_DAY = "walden_p_day"
     _HIDDEN_BUCKET = "walden_p_bucket"
@@ -1017,14 +1018,13 @@ class VersionedTable:
             if d:
                 tablelog.delete(d, self.spark, recursive=True)
 
-    def read(
-        self,
-        version: int | None = None,
-        branch: str | None = None,
-        tag: str | None = None,
-    ) -> DataFrame:
-        """Time travel: current snapshot, any retained ``version``
-        (VERSION AS OF), or a named ``branch``/``tag`` head."""
+    def _resolve(
+        self, version: int | None, branch: str | None, tag: str | None
+    ) -> tuple[dict, dict[int, dict]]:
+        """(manifest, all manifests by version) for one of ``version``,
+        ``branch`` or ``tag`` — with none given, main's head (never the
+        newest manifest on any branch: a side branch's commits stay
+        unpublished to main readers until merged)."""
         if sum(x is not None for x in (version, branch, tag)) > 1:
             raise ValueError("pass at most one of version / branch / tag")
         if tag is not None:
@@ -1032,22 +1032,29 @@ class VersionedTable:
             if ref is None:
                 raise ValueError(f"unknown tag {tag!r}")
             version = ref["version"]
-        elif branch is not None:
+        elif version is None:
+            branch = branch or "main"
             version = self.head(branch)
             if version is None:
-                raise FileNotFoundError(f"branch {branch!r} has no commits")
-        ms = self._manifests()
-        if not ms:
-            raise FileNotFoundError(f"no versions at {self.path}")
-        by_v = {m["version"]: m for m in ms}
-        if version is None:
-            m = ms[-1]
-        else:
-            if version not in by_v:
-                raise ValueError(
-                    f"version {version} not in retained versions {sorted(by_v)}"
+                raise FileNotFoundError(
+                    f"branch {branch!r} has no commits at {self.path}"
                 )
-            m = by_v[version]
+        by_v = {m["version"]: m for m in self._manifests()}
+        if version not in by_v:
+            raise ValueError(
+                f"version {version} not in retained versions {sorted(by_v)}"
+            )
+        return by_v[version], by_v
+
+    def read(
+        self,
+        version: int | None = None,
+        branch: str | None = None,
+        tag: str | None = None,
+    ) -> DataFrame:
+        """Time travel: main's current snapshot, any retained
+        ``version`` (VERSION AS OF), or a named ``branch``/``tag`` head."""
+        m, by_v = self._resolve(version, branch, tag)
         return self._dataframe_for(m, by_v, filters=None)
 
     def scan(
@@ -1064,22 +1071,8 @@ class VersionedTable:
         predicates are derived for time filters, and the exact residual
         predicate is applied to the surviving rows — so the result
         equals ``read().filter(...)``, minus the I/O."""
-        if version is None and branch is None and tag is None:
-            branch = "main"
-        # reuse read()'s ref resolution, then re-resolve the manifest
-        if tag is not None:
-            ref = self._read_refs().get(("tag", tag))
-            if ref is None:
-                raise ValueError(f"unknown tag {tag!r}")
-            version = ref["version"]
-        elif branch is not None:
-            version = self.head(branch)
-            if version is None:
-                raise FileNotFoundError(f"branch {branch!r} has no commits")
-        by_v = {m["version"]: m for m in self._manifests()}
-        if version not in by_v:
-            raise ValueError(f"version {version} not in retained versions")
-        return self._dataframe_for(by_v[version], by_v, filters=list(filters or []))
+        m, by_v = self._resolve(version, branch, tag)
+        return self._dataframe_for(m, by_v, filters=list(filters or []))
 
     # ---- snapshot resolution (full + merge-on-read layers) ----
 
@@ -1249,17 +1242,12 @@ class VersionedTable:
                 # untouched (sequence-number semantics via layer order).
                 # Plain join, not forced broadcast: AQE broadcasts small
                 # delete sets at runtime, and a huge delete set must not
-                # be driver-collected.
-                keys = self._read_snapshot(layer, None).select(*eq["on"]).distinct()
-                if layer.get("extra_delete_dir"):
-                    # delete-ONLY keys committed alongside the upsert
-                    # batch (Iceberg v2: data + delete files, one snapshot)
-                    keys = keys.unionByName(
-                        self.spark.read.parquet(layer["extra_delete_dir"]).select(
-                            *eq["on"]
-                        )
-                    ).distinct()
-                df = df.join(keys, on=list(eq["on"]), how="left_anti")
+                # be driver-collected. The USING join moves the key
+                # columns to the front; project back to the table order.
+                keys = self._eq_delete_keys(layer, eq["on"])
+                df = df.join(keys, on=list(eq["on"]), how="left_anti").select(
+                    *df.columns
+                )
                 if layer.get("upsert"):
                     # upsert layer: the SAME data file is both the
                     # delete-key source and the appended rows (Iceberg
@@ -1816,6 +1804,112 @@ class VersionedTable:
         return tablelog.exists(self._cdf_marker, self.spark)
 
     _CT = "_change_type"
+    _CV = "_commit_version"
+
+    # commits that change no rows a row-level feed can express:
+    # compaction/clustering rewrite bytes, not rows; schema DDL changes
+    # the SHAPE of every row (read_changes refuses ranges crossing one,
+    # same rule as renames)
+    _NO_ROW_CHANGES = (
+        "compact", "zorder", "rename_column", "add_column",
+        "drop_column", "widen_column", "compact_manifests",
+    )
+
+    def _commit_changes(
+        self, m: dict, parent: int | None, by_v: dict[int, dict]
+    ) -> tuple[DataFrame | None, DataFrame | None, bool]:
+        """The one rule for which rows commit ``m`` inserted or deleted
+        relative to ``parent``, its branch-lineage parent (``m`` need
+        not be in ``by_v``: commit-time staging passes the manifest
+        before its claim). Returns ``(deletes, inserts, appends)`` —
+        removed rows, added rows the commit's data files can't express
+        (rewrite diffs), and whether its own data files ARE its
+        inserts. Both feeds serve exactly this split: read_changes
+        derives it at read time, _stage_cdf stores it at commit time.
+
+        Cost: append and equality/position-delete commits replay in
+        O(delta) plus one semi-join against the pre-image (pruned to
+        the delete keys' range box for equality deletes); predicate
+        deletes/updates pay one filtered pre-image scan; a full rewrite
+        pays an exact multiset diff, O(both snapshots)."""
+        if m.get("operation") in self._NO_ROW_CHANGES:
+            return None, None, False
+        if not m.get("mor"):
+            if parent not in by_v:
+                return None, None, True  # first snapshot: data = inserts
+            pre = self._dataframe_for(by_v[parent], by_v, filters=None)
+            return (*self._diff(pre, self._read_snapshot(m, None)), False)
+        base = by_v[parent]
+        eq = m.get("equality_delete")
+        if eq is not None:
+            keys = self._eq_delete_keys(m, eq["on"])
+            pre = self._dataframe_for(
+                base, by_v, filters=self._key_box(keys, eq["on"])
+            )
+            deletes = pre.join(keys, on=list(eq["on"]), how="left_semi")
+            return deletes, None, bool(m.get("upsert"))
+        if m.get("position_delete"):
+            pos = [self._POS_FILE, self._POS_IDX]
+            pre = self._dataframe_for(base, by_v, filters=None, keep_pos=True)
+            dels = self.spark.read.parquet(m["data_dir"]).select(*pos)
+            return pre.join(dels, on=pos, how="inner").drop(*pos), None, False
+        pred = m.get("predicate")
+        if pred is not None:
+            pre = self._dataframe_for(base, by_v, filters=None)
+            # update_mor's rewritten rows are its data files
+            return pre.filter(F.expr(pred)), None, bool(m.get("data_dir"))
+        return None, None, True  # plain append (incl. schema evolution)
+
+    @staticmethod
+    def _diff(old: DataFrame, new: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(deleted, inserted) rows of a full rewrite ``old`` → ``new``:
+        the exact multiset diff, ``exceptAll`` both ways, in ``old``'s
+        column order."""
+        new = new.select(*old.columns)
+        return old.exceptAll(new), new.exceptAll(old)
+
+    def _key_box(self, keys: DataFrame, on: list[str]) -> list[tuple] | None:
+        """Scan filters bounding each key column to the delete keys'
+        [min, max] — Iceberg-style delete-file key-range pruning, a box
+        superset of the keys (conservative, like Iceberg's bound
+        metadata). Pushed into a pre-image read, footer-stat and
+        hidden-partition pruning skip files that can't hold a deleted
+        key. 2×k scalars from ONE tiny agg — never a driver collect of
+        the key set, never an IN-list (a 40k-literal isin was measured
+        10x SLOWER than the full scan). Clustered deletes (CDC's common
+        case: recent key ranges) prune to O(files-with-keys); scattered
+        keys degrade to the full semi-join. None for no keys."""
+        aggs = []
+        for i, kcol in enumerate(on):
+            aggs.append(F.min(kcol).alias(f"lo{i}"))
+            aggs.append(F.max(kcol).alias(f"hi{i}"))
+        mm = keys.agg(*aggs).collect()[0]
+        rng: list[tuple] = []
+        for i, kcol in enumerate(on):
+            if mm[f"lo{i}"] is not None:
+                rng.append((kcol, ">=", mm[f"lo{i}"]))
+                rng.append((kcol, "<=", mm[f"hi{i}"]))
+        return rng or None
+
+    def _stage_change_rows(
+        self, deletes: DataFrame | None, inserts: DataFrame | None
+    ) -> str | None:
+        """Write change rows to a new ``cdf=*`` dir as table columns +
+        ``_change_type``; returns it (None when there are no rows to
+        stage)."""
+        frames = [
+            df.withColumn(self._CT, F.lit(ct))
+            for df, ct in ((deletes, "delete"), (inserts, "insert"))
+            if df is not None
+        ]
+        if not frames:
+            return None
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        cdf_dir = f"{self.path}/data/cdf={uuid.uuid4().hex[:12]}"
+        out.write.mode("errorifexists").parquet(cdf_dir)
+        return cdf_dir
 
     def _stage_cdf(self, manifest: dict, parent: int | None) -> dict:
         """Stage this commit's change rows BEFORE the manifest claim
@@ -1824,160 +1918,90 @@ class VersionedTable:
         ``appends`` — the commit's own data files are its inserts;
         ``dir`` — parquet of table-schema rows + ``_change_type`` for
         everything data files can't express (deletes, rewrite diffs)."""
-        op = manifest.get("operation", "")
-        if op in (
-            "compact", "zorder", "rename_column", "add_column",
-            "drop_column", "widen_column", "compact_manifests",
-        ):
-            # compaction/clustering rewrite bytes, not rows; schema DDL
-            # changes the SHAPE of every row, which a row-level change
-            # feed cannot express — read_changes refuses ranges that
-            # cross one (same rule as renames)
-            return {"dir": None, "appends": False}
         by_v = {m["version"]: m for m in self._manifests()}
-        pre = (
-            self._dataframe_for(by_v[parent], by_v, filters=None)
-            if parent is not None and parent in by_v
-            else None
+        deletes, inserts, appends = self._commit_changes(manifest, parent, by_v)
+        return {"dir": self._stage_change_rows(deletes, inserts), "appends": appends}
+
+    def _as_changes(
+        self, df: DataFrame, cols: list[str], ct: str | None, v: int | Column
+    ) -> DataFrame:
+        """Change rows conformed to the head columns ``cols`` (columns
+        a commit predates read as NULL), plus ``_change_type`` — ``ct``,
+        or the frame's own column when None — and ``_commit_version``
+        (a version, or a column holding one)."""
+        have = set(df.columns)
+        return df.select(
+            *[c if c in have else F.lit(None).alias(c) for c in cols],
+            (F.col(self._CT) if ct is None else F.lit(ct)).alias(self._CT),
+            (v if isinstance(v, Column) else F.lit(v)).cast("long").alias(self._CV),
         )
-        data_dir = manifest.get("data_dir")
-        deletes: DataFrame | None = None
-        inserts: DataFrame | None = None  # rewrite diffs only
-        appends = False
-        if not manifest.get("mor"):
-            if pre is None:
-                appends = True  # first snapshot: data files ARE the inserts
-            else:
-                # full rewrite: exact multiset diff, the honest cost
-                new = self.spark.read.parquet(data_dir)
-                cols = pre.columns
-                deletes = pre.exceptAll(new.select(*cols))
-                inserts = new.select(*cols).exceptAll(pre)
-        else:
-            eq = manifest.get("equality_delete")
-            if eq is not None:
-                keys = (
-                    self.spark.read.parquet(data_dir).select(*eq["on"]).distinct()
-                )
-                if manifest.get("extra_delete_dir"):
-                    keys = keys.unionByName(
-                        self.spark.read.parquet(
-                            manifest["extra_delete_dir"]
-                        ).select(*eq["on"])
-                    ).distinct()
-                deletes = pre.join(keys, on=list(eq["on"]), how="left_semi")
-                appends = bool(manifest.get("upsert"))
-            elif manifest.get("position_delete"):
-                pre_pos = self._dataframe_for(
-                    by_v[parent], by_v, filters=None, keep_pos=True
-                )
-                dels = self.spark.read.parquet(data_dir).select(
-                    self._POS_FILE, self._POS_IDX
-                )
-                deletes = pre_pos.join(
-                    dels, on=[self._POS_FILE, self._POS_IDX], how="inner"
-                ).drop(self._POS_FILE, self._POS_IDX)
-            elif manifest.get("predicate") is not None:
-                cond = F.expr(manifest["predicate"])
-                deletes = pre.filter(cond)
-                appends = data_dir is not None  # update_mor's rewritten rows
-            else:
-                appends = True  # plain append (incl. schema evolution)
-        if deletes is None and inserts is None:
-            return {"dir": None, "appends": appends}
-        cols = pre.columns
-        frames = []
-        if deletes is not None:
-            frames.append(
-                deletes.select(*cols).withColumn(self._CT, F.lit("delete"))
+
+    def _union_changes(self, frames: list[DataFrame], head: DataFrame) -> DataFrame:
+        """One change feed from per-commit frames; with none, an empty
+        feed in ``head``'s schema plus the change columns."""
+        if not frames:
+            schema = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}" for f in head.schema.fields
             )
-        if inserts is not None:
-            frames.append(
-                inserts.select(*cols).withColumn(self._CT, F.lit("insert"))
+            return self.spark.createDataFrame(
+                [], schema + f", {self._CT} string, {self._CV} long"
             )
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
-        cdf_dir = f"{self.path}/data/cdf={uuid.uuid4().hex[:12]}"
-        out.write.mode("errorifexists").parquet(cdf_dir)
-        return {"dir": cdf_dir, "appends": appends}
+        return out
+
+    def _change_range(
+        self, from_version: int, to_version: int | None, branch: str
+    ) -> tuple[DataFrame, list[dict], dict[int, dict]]:
+        """(snapshot at ``to_version``, lineage manifests in
+        ``(from_version, to_version]`` oldest first, manifests by
+        version) for a change read; ``to_version`` defaults to the
+        branch head. ``from_version=-1`` is the pre-table empty state
+        (inclusive-of-v0 reads; the Delta table_changes TVF maps
+        startingVersion → start - 1)."""
+        by_v = {m["version"]: m for m in self._manifests()}
+        if to_version is None:
+            to_version = self.head(branch)
+        if to_version not in by_v:
+            raise ValueError(f"version {to_version} not retained")
+        if from_version not in by_v and from_version != -1:
+            raise ValueError(f"version {from_version} not retained")
+        if from_version != -1 and from_version not in self._ancestors(to_version):
+            # _lineage would silently walk past a non-ancestor to the
+            # root and return the WHOLE history as "changes"
+            raise ValueError(
+                f"version {from_version} is not an ancestor of {to_version} "
+                "(different branch lineage?)"
+            )
+        path = self._lineage(to_version, from_version, by_v)
+        return self._dataframe_for(by_v[to_version], by_v, None), path, by_v
 
     def read_cdf(
         self, from_version: int, to_version: int | None = None, branch: str = "main"
     ) -> DataFrame:
-        """Batch read of the MATERIALIZED change feed — the files
-        commits staged at write time (enable_cdf), zero computation at
-        read: appends replay straight from their data files, everything
-        else from the commit's CDF file. Unlike :meth:`read_changes`
-        (which recomputes changes from layer semantics) this rides
-        through MoR restores, and a million-row delete costs a file
-        scan, not a pre-image join. Raises on commits that predate
-        enabling.
+        """Batch read of the MATERIALIZED change feed: the rows
+        :meth:`_commit_changes` derived when each commit was made
+        (enable_cdf), served with zero computation — appends replay
+        straight from their data files, everything else from the
+        commit's staged CDF file. Same rows as :meth:`read_changes`,
+        which derives them at read time by the same rule; this feed
+        also rides through MoR restores, and a million-row delete costs
+        a file scan, not a pre-image join. Raises on commits that
+        predate enabling.
 
         ``from_version`` is an EXCLUSIVE baseline (changes in
         ``(from, to]``); ``from_version=-1`` is the pre-table empty
         state, so v0's inserts are included — what Delta's INCLUSIVE
         ``startingVersion=0`` maps to (the table_changes TVF passes
         ``starting - 1`` here)."""
-        ms = self._manifests()
-        by_v = {m["version"]: m for m in ms}
-        head = self.head(branch)
-        if to_version is None:
-            to_version = head
-        for v in (from_version, to_version):
-            if v not in by_v and v != -1:
-                raise ValueError(f"version {v} not retained")
-        if from_version != -1 and from_version not in self._ancestors(to_version):
-            raise ValueError(
-                f"version {from_version} is not an ancestor of {to_version}"
-            )
-        path = self._lineage(to_version, from_version, by_v)
-        head_cols = self.read(version=to_version).columns
-        _CV = "_commit_version"
-        frames: list[DataFrame] = []
-
-        def conform(df: DataFrame, v: int, ct: str | None) -> DataFrame:
-            out = df
-            for c in head_cols:
-                if c not in out.columns:
-                    out = out.withColumn(c, F.lit(None))
-            ct_col = F.lit(ct) if ct is not None else F.col(self._CT)
-            return out.select(
-                *head_cols,
-                ct_col.alias(self._CT),
-                F.lit(v).cast("long").alias(_CV),
-            )
-
-        for m in path:
-            cdf = m.get("cdf")
-            if cdf is None:
-                raise ValueError(
-                    f"version {m['version']} carries no change-data files "
-                    "(committed before enable_cdf()); use read_changes() "
-                    "or start past the enable point"
-                )
-            if cdf.get("appends") and m.get("data_dir"):
-                frames.append(
-                    conform(self._read_snapshot(m, None), m["version"], "insert")
-                )
-            if cdf.get("dir"):
-                frames.append(
-                    conform(
-                        self.spark.read.parquet(cdf["dir"]), m["version"], None
-                    )
-                )
-        if not frames:
-            schema = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in self.read(version=to_version).schema.fields
-            )
-            return self.spark.createDataFrame(
-                [], schema + f", {self._CT} string, {_CV} long"
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        head, path, _ = self._change_range(from_version, to_version, branch)
+        frames = [
+            self._as_changes(self.spark.read.parquet(d), head.columns, ct, m["version"])
+            for m in path
+            for d, ct in tablelog.change_dirs(m)
+        ]
+        return self._union_changes(frames, head)
 
     def read_changes(
         self, from_version: int, to_version: int | None = None, branch: str = "main"
@@ -1990,37 +2014,16 @@ class VersionedTable:
         and ``_commit_version``. An update surfaces as delete+insert
         at the same commit version.
 
-        Cost model, the reason CDC wants a MoR table at 100 TB: append
-        and equality/position-delete commits replay in O(delta) (plus
-        one semi-join against the pre-image state to materialize
-        deleted rows); predicate deletes/updates pay one filtered scan
-        of the pre-image (their honest cost); compact/zorder commits
-        rewrite bytes but change no logical rows and emit nothing. A
-        full-rewrite commit (CoW write/delete/update/merge) falls back
-        to an exact multiset diff (``exceptAll`` both ways) — correct,
-        but O(both snapshots); keep DML merge-on-read if consumers
-        tail the feed. Ranges crossing a column rename are refused
-        (the pre- and post-rename halves have different schemas —
-        Delta CDF restricts column-mapping changes the same way)."""
-        ms = self._manifests()
-        by_v = {m["version"]: m for m in ms}
-        head = self.head(branch)
-        if to_version is None:
-            to_version = head
-        if to_version not in by_v:
-            raise ValueError(f"version {to_version} not retained")
-        if from_version not in by_v and from_version != -1:
-            # -1 = pre-table empty state (inclusive-of-v0 reads; the
-            # Delta table_changes TVF maps startingVersion → start - 1)
-            raise ValueError(f"version {from_version} not retained")
-        if from_version != -1 and from_version not in self._ancestors(to_version):
-            # _lineage would silently walk past a non-ancestor to the
-            # root and return the WHOLE history as "changes"
-            raise ValueError(
-                f"version {from_version} is not an ancestor of {to_version} "
-                "(different branch lineage?)"
-            )
-        path = self._lineage(to_version, from_version, by_v)
+        Derived at read time by :meth:`_commit_changes` — the rule
+        :meth:`read_cdf` serves pre-staged on CDF-enabled tables — so
+        it works on any table; see that method for the per-commit cost
+        (keep DML merge-on-read if consumers tail the feed: a full
+        rewrite costs O(both snapshots)). Runs of consecutive
+        equality-delete commits share one pre-image read. Ranges
+        crossing a schema change are refused (the halves have
+        different schemas — Delta CDF restricts column-mapping changes
+        the same way), and so are ranges crossing a MoR restore."""
+        head, path, by_v = self._change_range(from_version, to_version, branch)
         if any(
             m.get("rename")
             or m.get("add_column")
@@ -2042,44 +2045,20 @@ class VersionedTable:
                 "change range crosses a merge-on-read restore; read "
                 "changes before and after it separately"
             )
-        head_cols = self.read(version=to_version).columns
-        _CT, _CV = "_change_type", "_commit_version"
-
-        def tag(df: DataFrame, ct: str, v: int) -> DataFrame:
-            out = df
-            for c in head_cols:
-                if c not in out.columns:
-                    out = out.withColumn(c, F.lit(None))
-            return out.select(
-                *head_cols,
-                F.lit(ct).alias(_CT),
-                F.lit(v).cast("long").alias(_CV),
-            )
-
+        cols = head.columns
         frames: list[DataFrame] = []
         pi = 0
         while pi < len(path):
             m = path[pi]
             pi += 1
-            v = m["version"]
-            parent = tablelog.parent_of(m)
-            op = m.get("operation", "")
             # Batched pre-image reconstruction for RUNS of consecutive
             # equality-delete/upsert commits on the same key columns
-            # (r15, VERDICT r14 #5): the per-commit branch below pays
-            # one pre-image snapshot reconstruction + one min/max
-            # driver collect + one semi-join PER COMMIT, and commit i's
-            # pre-image re-folds every earlier MoR layer — O(k²) layer
-            # folds for k consecutive commits. The batched path
-            # reconstructs the FIRST commit's pre-image once, unions
-            # the run's key sets tagged with their commit version, and
-            # derives each row's deleting commit as the MINIMUM tagged
-            # version greater than the row's birth layer — identical
-            # multiset of (row, 'delete', version) rows because
-            # equality deletes remove by key: a key deleted at v_i is
-            # absent from every later pre-image until an upsert
-            # re-inserts it, which the per-insert-layer joins below
-            # replay exactly. Read-path only; commits stay per-commit.
+            # (r15, VERDICT r14 #5): per commit, _commit_changes pays
+            # one pre-image reconstruction + one key-box collect + one
+            # semi-join, and commit i's pre-image re-folds every
+            # earlier MoR layer — O(k²) layer folds for k consecutive
+            # commits. See _eq_delete_run_changes for the batched
+            # equivalent. Read-path only; commits stay per-commit.
             eq0 = m.get("equality_delete")
             if m.get("mor") and eq0 is not None:
                 run = [m]
@@ -2098,99 +2077,26 @@ class VersionedTable:
                     else:
                         break
                 if len(run) >= 2:
-                    frames.extend(
-                        self._eq_delete_run_changes(run, by_v, head_cols)
-                    )
+                    frames.extend(self._eq_delete_run_changes(run, by_v, cols))
                     continue
-                # single commit: fall through to the per-commit branch
-            if not m.get("mor"):
-                if op in ("compact", "zorder"):
-                    continue  # physical rewrite, no logical change
-                # full rewrite: exact multiset diff against the parent
-                new = self.read(version=v)
-                if parent is None:
-                    frames.append(tag(new, "insert", v))
-                    continue
-                old = self.read(version=parent).select(*new.columns)
-                frames.append(tag(new.exceptAll(old), "insert", v))
-                frames.append(tag(old.exceptAll(new), "delete", v))
-                continue
-            pre = self._dataframe_for(by_v[parent], by_v, filters=None)
-            if m.get("position_delete"):
-                pre_pos = self._dataframe_for(
-                    by_v[parent], by_v, filters=None, keep_pos=True
-                )
-                dels = self.spark.read.parquet(m["data_dir"]).select(
-                    self._POS_FILE, self._POS_IDX
-                )
-                gone = pre_pos.join(
-                    dels, on=[self._POS_FILE, self._POS_IDX], how="inner"
-                ).drop(self._POS_FILE, self._POS_IDX)
-                frames.append(tag(gone, "delete", v))
-                continue
-            eq = m.get("equality_delete")
-            if eq is not None:
-                keys = self._read_snapshot(m, None).select(*eq["on"]).distinct()
-                if m.get("extra_delete_dir"):
-                    keys = keys.unionByName(
-                        self.spark.read.parquet(m["extra_delete_dir"]).select(
-                            *eq["on"]
-                        )
-                    ).distinct()
-                pre_src = pre
-                # Iceberg-style delete-file key-range pruning: push the
-                # per-column [min, max] of the stored delete keys into
-                # the pre-image read, so footer-stat / hidden-partition
-                # pruning skips files that can't hold any deleted key.
-                # 2×k scalars from ONE tiny agg over the delete layer —
-                # never a driver collect of the key set, never an
-                # IN-list expression (a 40k-literal isin was measured
-                # 10x SLOWER than the full scan). Clustered deletes
-                # (CDC's common case: recent key ranges) prune to
-                # O(files-with-keys); scattered keys degrade gracefully
-                # to the full semi-join. Multi-column keys AND their
-                # per-column ranges (r06; a box superset of the keys —
-                # conservative, like Iceberg's bound metadata).
-                aggs = []
-                for i, kcol in enumerate(eq["on"]):
-                    aggs.append(F.min(kcol).alias(f"lo{i}"))
-                    aggs.append(F.max(kcol).alias(f"hi{i}"))
-                mm = keys.agg(*aggs).collect()[0]
-                rng: list[tuple] = []
-                for i, kcol in enumerate(eq["on"]):
-                    if mm[f"lo{i}"] is not None:
-                        rng.append((kcol, ">=", mm[f"lo{i}"]))
-                        rng.append((kcol, "<=", mm[f"hi{i}"]))
-                if rng:
-                    pre_src = self._dataframe_for(
-                        by_v[parent], by_v, filters=rng
-                    )
-                gone = pre_src.join(keys, on=list(eq["on"]), how="left_semi")
-                frames.append(tag(gone, "delete", v))
-                if m.get("upsert"):
-                    frames.append(tag(self._read_snapshot(m, None), "insert", v))
-                continue
-            pred = m.get("predicate")
-            if pred is not None:
-                frames.append(tag(pre.filter(F.expr(pred)), "delete", v))
-            if m.get("data_dir"):
-                frames.append(tag(self._read_snapshot(m, None), "insert", v))
-        if not frames:
-            schema = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in self.read(version=to_version).schema.fields
+            v = m["version"]
+            deletes, inserts, appends = self._commit_changes(
+                m, tablelog.parent_of(m), by_v
             )
-            return self.spark.createDataFrame(
-                [], schema + f", {_CT} string, {_CV} long"
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+            for df, ct in ((deletes, "delete"), (inserts, "insert")):
+                if df is not None:
+                    frames.append(self._as_changes(df, cols, ct, v))
+            if appends and m.get("data_dir"):
+                frames.append(
+                    self._as_changes(self._read_snapshot(m, None), cols, "insert", v)
+                )
+        return self._union_changes(frames, head)
 
     def _eq_delete_keys(self, m: dict, on: list[str]) -> DataFrame:
         """Distinct delete-key rows of one equality-delete commit
-        (data-file keys plus any delete-only sidecar)."""
+        (data-file keys plus any delete-only sidecar committed
+        alongside an upsert — Iceberg v2: data + delete files, one
+        snapshot)."""
         keys = self._read_snapshot(m, None).select(*on).distinct()
         if m.get("extra_delete_dir"):
             keys = keys.unionByName(
@@ -2199,7 +2105,7 @@ class VersionedTable:
         return keys
 
     def _eq_delete_run_changes(
-        self, run: list[dict], by_v: dict[int, dict], head_cols: list[str]
+        self, run: list[dict], by_v: dict[int, dict], cols: list[str]
     ) -> list[DataFrame]:
         """Change frames for a run of >=2 CONSECUTIVE equality-delete/
         upsert commits sharing key columns, with ONE pre-image
@@ -2215,7 +2121,6 @@ class VersionedTable:
         multiset of (row, 'delete', _commit_version) therefore equals
         the sequential per-commit semi-joins, and insert frames are
         unchanged (each upsert's data file, tagged at its version)."""
-        _CT, _CV = "_change_type", "_commit_version"
         on = list(run[0]["equality_delete"]["on"])
         tagged_keys = [
             self._eq_delete_keys(m, on).withColumn(
@@ -2226,62 +2131,28 @@ class VersionedTable:
         all_keys = tagged_keys[0]
         for kf in tagged_keys[1:]:
             all_keys = all_keys.unionByName(kf)
-
-        # one min/max collect over the UNION of the run's keys — the
-        # same conservative footer-stat pruning box the per-commit
-        # branch pushes, one job instead of one per commit
-        aggs = []
-        for i, kcol in enumerate(on):
-            aggs.append(F.min(kcol).alias(f"lo{i}"))
-            aggs.append(F.max(kcol).alias(f"hi{i}"))
-        mm = all_keys.agg(*aggs).collect()[0]
-        rng: list[tuple] = []
-        for i, kcol in enumerate(on):
-            if mm[f"lo{i}"] is not None:
-                rng.append((kcol, ">=", mm[f"lo{i}"]))
-                rng.append((kcol, "<=", mm[f"hi{i}"]))
-
-        parent = tablelog.parent_of(run[0])
-        pre = self._dataframe_for(by_v[parent], by_v, filters=rng or None)
-
-        def fill(df: DataFrame) -> DataFrame:
-            for c in head_cols:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None))
-            return df
-
-        def delete_frame(src: DataFrame, first_del: DataFrame) -> DataFrame:
-            joined = fill(src).join(first_del, on=on, how="inner")
-            return joined.select(
-                *head_cols,
-                F.lit("delete").alias(_CT),
-                F.col("_del_v").cast("long").alias(_CV),
-            )
-
-        frames: list[DataFrame] = []
-        # rows of the run's base pre-image: first deleting version overall
-        frames.append(
-            delete_frame(pre, all_keys.groupBy(*on).agg(F.min("_del_v").alias("_del_v")))
+        # one key box over the UNION of the run's keys: one job
+        # instead of one per commit
+        pre = self._dataframe_for(
+            by_v[tablelog.parent_of(run[0])], by_v, filters=self._key_box(all_keys, on)
         )
+
+        def deletes(src: DataFrame, keys: DataFrame) -> DataFrame:
+            first = keys.groupBy(*on).agg(F.min("_del_v").alias("_del_v"))
+            joined = src.join(first, on=on, how="inner")
+            return self._as_changes(joined, cols, "delete", F.col("_del_v"))
+
+        # rows of the run's base pre-image: first deleting version overall
+        frames = [deletes(pre, all_keys)]
         # rows inserted by an upsert INSIDE the run: delete-able only by
         # strictly later commits of the run; the insert frame itself is
-        # the same one the per-commit branch emits
+        # the same one the per-commit rule emits
         for m in run:
             if m.get("upsert"):
                 ins = self._read_snapshot(m, None)
                 later = all_keys.filter(F.col("_del_v") > m["version"])
-                frames.append(
-                    delete_frame(
-                        ins, later.groupBy(*on).agg(F.min("_del_v").alias("_del_v"))
-                    )
-                )
-                frames.append(
-                    fill(ins).select(
-                        *head_cols,
-                        F.lit("insert").alias(_CT),
-                        F.lit(m["version"]).cast("long").alias(_CV),
-                    )
-                )
+                frames.append(deletes(ins, later))
+                frames.append(self._as_changes(ins, cols, "insert", m["version"]))
         return frames
 
     def rewrite_zorder(
@@ -2520,14 +2391,8 @@ class VersionedTable:
             # streams ride straight through a rollback (batch
             # read_changes still refuses MoR-restore ranges; streams
             # don't have to)
-            old = self.read(version=parent)
-            new = self.read(version=version).select(*old.columns)
-            diff = new.exceptAll(old).withColumn(self._CT, F.lit("insert")).unionByName(
-                old.exceptAll(new).withColumn(self._CT, F.lit("delete"))
-            )
-            cdf_dir = f"{self.path}/data/cdf={uuid.uuid4().hex[:12]}"
-            diff.write.mode("errorifexists").parquet(cdf_dir)
-            nm["cdf"] = {"dir": cdf_dir, "appends": False}
+            changes = self._diff(self.read(version=parent), self.read(version=version))
+            nm["cdf"] = {"dir": self._stage_change_rows(*changes), "appends": False}
         try:
             self._write_manifest(nm, overwrite=False)
         except FileExistsError as exc:
@@ -3050,17 +2915,12 @@ class VersionedTable:
                 continue
             eq = m.get("equality_delete")
             if eq is not None:
-                touched = self._read_snapshot(m, None)
                 if sorted(eq["on"]) != sorted(keys):
                     raise MergeConflictError(
                         f"equality-delete layer v{m['version']} keyed on "
                         f"{eq['on']}, merge keyed on {keys}"
                     )
-                parts.append(touched.select(*keys))
-                if m.get("extra_delete_dir"):
-                    parts.append(
-                        self.spark.read.parquet(m["extra_delete_dir"]).select(*keys)
-                    )
+                parts.append(self._eq_delete_keys(m, keys))
                 continue
             pred = m.get("predicate")
             if pred is not None:
