@@ -1663,9 +1663,13 @@ def test_cdf_files_match_computed_changes_random_ops(spark, tmp_path):
     MATERIALIZED change feed (read_cdf — files staged at commit time)
     is multiset-equal to the COMPUTED one (read_changes — replayed from
     layer semantics) over every commit range both can serve. Inputs
-    include full-snapshot restores to v0 (restore's own exceptAll diff)
-    and a two-column-key table whose deletes and upserts name the key
-    in reverse column order."""
+    include full-snapshot restores to v0 (restore's own exceptAll diff),
+    a two-column-key table whose deletes and upserts name the key in
+    reverse column order, and a closing full rewrite that drops or adds
+    a column. Both feeds must also net to the head: inserts minus
+    deletes over the whole history is the head snapshot."""
+    from collections import Counter
+
     from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
@@ -1684,9 +1688,19 @@ def test_cdf_files_match_computed_changes_random_ops(spark, tmp_path):
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    @given(ops=st.lists(op, min_size=1, max_size=4), two_key=st.booleans())
-    @example(ops=[("delete", [1, 2]), ("restore", 0), ("upsert", [2, 3])], two_key=True)
-    def run(ops, two_key):
+    @given(
+        ops=st.lists(op, min_size=1, max_size=4),
+        two_key=st.booleans(),
+        reshape=st.sampled_from([None, "drop", "add"]),
+    )
+    @example(
+        ops=[("delete", [1, 2]), ("restore", 0), ("upsert", [2, 3])],
+        two_key=True,
+        reshape=None,
+    )
+    @example(ops=[("upsert", [4])], two_key=False, reshape="drop")
+    @example(ops=[("delete", [5])], two_key=True, reshape="add")
+    def run(ops, two_key, reshape):
         counter[0] += 1
         t = VersionedTable(spark, str(tmp_path / f"cdfeq{counter[0]}"))
         t.enable_cdf()
@@ -1720,14 +1734,26 @@ def test_cdf_files_match_computed_changes_random_ops(spark, tmp_path):
                 t.write(
                     t.read().filter(f"id % 11 <> {arg}"), operation="rewrite"
                 )
+        # full rewrites that change the column set (write() records no
+        # schema-change flag for them, so change reads cross them)
+        if reshape == "drop":
+            t.write(t.read().drop("v").filter("id % 11 <> 3"), operation="rewrite")
+        elif reshape == "add":
+            t.write(
+                t.read().withColumn("w", F.expr("IF(id % 2 = 0, id, NULL)")),
+                operation="rewrite",
+            )
         head = t.head("main")
-        mat = sorted(
-            map(tuple, t.read_cdf(0, head).collect())
-        )
-        comp = sorted(
-            map(tuple, t.read_changes(0, head).collect())
-        )
+        # multisets, not sorted lists: an added column holds NULLs
+        mat = Counter(map(tuple, t.read_cdf(0, head).collect()))
+        comp = Counter(map(tuple, t.read_changes(0, head).collect()))
         assert mat == comp
+        for feed in (t.read_cdf, t.read_changes):
+            ch = feed(-1, head).collect()
+            net = Counter(r[:-2] for r in ch if r[-2] == "insert")
+            net.subtract(r[:-2] for r in ch if r[-2] == "delete")
+            assert +net == Counter(map(tuple, t.read().collect()))
+            assert not -net  # no row deleted more often than inserted
 
     run()
 

@@ -640,9 +640,10 @@ def lineage(ms: Iterable[dict], head: int | None) -> set[int]:
 
 def change_dirs(manifest: dict) -> list[tuple[str, str | None]]:
     """``(parquet dir, change type)`` pairs serving one commit's change
-    rows on a CDF-enabled table: its own data dir stamped 'insert' when
-    the data files ARE its inserts, and its staged CDF dir (change type
-    None — each row carries its own ``_change_type``). A commit made
+    rows from its ``cdf`` entry (staged at commit time, or derived by
+    ``read_changes``): its own data dir stamped 'insert' when the data
+    files ARE its inserts, and its staged CDF dir (change type None —
+    each row carries its own ``_change_type``). A commit made
     before ``enable_cdf()`` staged nothing, so it is refused rather
     than silently read as changing no rows."""
     v = manifest["version"]

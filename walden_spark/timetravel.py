@@ -90,6 +90,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from functools import reduce
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -1806,14 +1807,9 @@ class VersionedTable:
     _CT = "_change_type"
     _CV = "_commit_version"
 
-    # commits that change no rows a row-level feed can express:
-    # compaction/clustering rewrite bytes, not rows; schema DDL changes
-    # the SHAPE of every row (read_changes refuses ranges crossing one,
-    # same rule as renames)
-    _NO_ROW_CHANGES = (
-        "compact", "zorder", "rename_column", "add_column",
-        "drop_column", "widen_column", "compact_manifests",
-    )
+    # commits that rewrite bytes, not rows (compaction, clustering,
+    # manifest collapse): no row-level change to report
+    _NO_ROW_CHANGES = ("compact", "zorder", "compact_manifests")
 
     def _commit_changes(
         self, m: dict, parent: int | None, by_v: dict[int, dict]
@@ -1832,7 +1828,7 @@ class VersionedTable:
         the delete keys' range box for equality deletes); predicate
         deletes/updates pay one filtered pre-image scan; a full rewrite
         pays an exact multiset diff, O(both snapshots)."""
-        if m.get("operation") in self._NO_ROW_CHANGES:
+        if m.get("operation") in self._NO_ROW_CHANGES or self._is_schema_change(m):
             return None, None, False
         if not m.get("mor"):
             if parent not in by_v:
@@ -1863,9 +1859,19 @@ class VersionedTable:
     @staticmethod
     def _diff(old: DataFrame, new: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(deleted, inserted) rows of a full rewrite ``old`` → ``new``:
-        the exact multiset diff, ``exceptAll`` both ways, in ``old``'s
-        column order."""
-        new = new.select(*old.columns)
+        the exact multiset diff, ``exceptAll`` both ways, on ``new``'s
+        columns. A rewrite may change the column set: ``old`` is
+        compared on ``new``'s columns, those it lacks reading as NULL
+        (the rule the feed applies to commits that predate a column),
+        so a dropped column is projected away and an added one shows
+        as the rows whose value it changed."""
+        have = set(old.columns)
+        old = old.select(
+            *[
+                c if c in have else F.lit(None).cast(new.schema[c].dataType).alias(c)
+                for c in new.columns
+            ]
+        )
         return old.exceptAll(new), new.exceptAll(old)
 
     def _key_box(self, keys: DataFrame, on: list[str]) -> list[tuple] | None:
@@ -1904,10 +1910,8 @@ class VersionedTable:
         ]
         if not frames:
             return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
         cdf_dir = f"{self.path}/data/cdf={uuid.uuid4().hex[:12]}"
+        out = reduce(DataFrame.unionByName, frames)
         out.write.mode("errorifexists").parquet(cdf_dir)
         return cdf_dir
 
@@ -1946,10 +1950,7 @@ class VersionedTable:
             return self.spark.createDataFrame(
                 [], schema + f", {self._CT} string, {self._CV} long"
             )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        return reduce(DataFrame.unionByName, frames)
 
     def _change_range(
         self, from_version: int, to_version: int | None, branch: str
@@ -1996,11 +1997,7 @@ class VersionedTable:
         ``startingVersion=0`` maps to (the table_changes TVF passes
         ``starting - 1`` here)."""
         head, path, _ = self._change_range(from_version, to_version, branch)
-        frames = [
-            self._as_changes(self.spark.read.parquet(d), head.columns, ct, m["version"])
-            for m in path
-            for d, ct in tablelog.change_dirs(m)
-        ]
+        frames = [f for m in path for f in self._dir_changes(m, head.columns)]
         return self._union_changes(frames, head)
 
     def read_changes(
@@ -2024,13 +2021,7 @@ class VersionedTable:
         different schemas — Delta CDF restricts column-mapping changes
         the same way), and so are ranges crossing a MoR restore."""
         head, path, by_v = self._change_range(from_version, to_version, branch)
-        if any(
-            m.get("rename")
-            or m.get("add_column")
-            or m.get("drop_column")
-            or m.get("widen_column")
-            for m in path
-        ):
+        if any(self._is_schema_change(m) for m in path):
             raise ValueError(
                 "change range crosses a schema change (rename/add/drop "
                 "column); read changes up to it and after it separately"
@@ -2079,18 +2070,35 @@ class VersionedTable:
                 if len(run) >= 2:
                     frames.extend(self._eq_delete_run_changes(run, by_v, cols))
                     continue
-            v = m["version"]
-            deletes, inserts, appends = self._commit_changes(
-                m, tablelog.parent_of(m), by_v
+            frames.extend(
+                self._commit_change_frames(m, tablelog.parent_of(m), by_v, cols)
             )
-            for df, ct in ((deletes, "delete"), (inserts, "insert")):
-                if df is not None:
-                    frames.append(self._as_changes(df, cols, ct, v))
-            if appends and m.get("data_dir"):
-                frames.append(
-                    self._as_changes(self._read_snapshot(m, None), cols, "insert", v)
-                )
         return self._union_changes(frames, head)
+
+    def _commit_change_frames(
+        self, m: dict, parent: int | None, by_v: dict[int, dict], cols: list[str]
+    ) -> list[DataFrame]:
+        """Commit ``m``'s change rows derived now, conformed to ``cols``:
+        the deletes and inserts :meth:`_commit_changes` finds, plus the
+        files :func:`tablelog.change_dirs` serves for its ``appends``
+        flag — as if the commit had staged that CDF entry, so both
+        feeds turn the flag into files by one rule."""
+        deletes, inserts, appends = self._commit_changes(m, parent, by_v)
+        v = m["version"]
+        return [
+            self._as_changes(df, cols, ct, v)
+            for df, ct in ((deletes, "delete"), (inserts, "insert"))
+            if df is not None
+        ] + self._dir_changes(dict(m, cdf={"appends": appends}), cols)
+
+    def _dir_changes(self, m: dict, cols: list[str]) -> list[DataFrame]:
+        """Change frames read from the parquet dirs
+        :func:`tablelog.change_dirs` names for commit ``m``, conformed
+        to ``cols``."""
+        return [
+            self._as_changes(self.spark.read.parquet(d), cols, ct, m["version"])
+            for d, ct in tablelog.change_dirs(m)
+        ]
 
     def _eq_delete_keys(self, m: dict, on: list[str]) -> DataFrame:
         """Distinct delete-key rows of one equality-delete commit
@@ -2128,9 +2136,7 @@ class VersionedTable:
             )
             for m in run
         ]
-        all_keys = tagged_keys[0]
-        for kf in tagged_keys[1:]:
-            all_keys = all_keys.unionByName(kf)
+        all_keys = reduce(DataFrame.unionByName, tagged_keys)
         # one key box over the UNION of the run's keys: one job
         # instead of one per commit
         pre = self._dataframe_for(
@@ -2505,9 +2511,16 @@ class VersionedTable:
             return None
         return self.compact(branch=branch, **compact_kwargs)
 
-    _SCHEMA_LAYER_KINDS = (
-        "rename", "add_column", "drop_column", "widen_column", "schema_project"
-    )
+    # schema DDL layers: each changes the SHAPE of every row
+    _SCHEMA_CHANGE_KINDS = ("rename", "add_column", "drop_column", "widen_column")
+    _SCHEMA_LAYER_KINDS = (*_SCHEMA_CHANGE_KINDS, "schema_project")
+
+    @classmethod
+    def _is_schema_change(cls, m: dict) -> bool:
+        """Whether commit ``m`` is a schema DDL layer (rename / add /
+        drop / widen column): it changes no rows, and change reads and
+        key merges refuse ranges crossing it."""
+        return any(m.get(k) for k in cls._SCHEMA_CHANGE_KINDS)
 
     def _schema_run(self, branch: str) -> tuple[list[dict], int | None]:
         """(newest-first run of consecutive metadata-only SCHEMA layers
@@ -2943,10 +2956,7 @@ class VersionedTable:
                 parts.append(delta.select(*keys))
         if not parts:
             return self.spark.createDataFrame([], ", ".join(f"{k} string" for k in keys))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
+        return reduce(DataFrame.unionByName, parts).distinct()
 
     def _merge_three_way(
         self,
@@ -2974,11 +2984,7 @@ class VersionedTable:
         full = [
             m
             for m in src_path + dst_path
-            if not m.get("mor")
-            or m.get("rename")
-            or m.get("add_column")
-            or m.get("drop_column")
-            or m.get("widen_column")
+            if not m.get("mor") or self._is_schema_change(m)
         ]
         if full:
             ops = {m["version"]: m["operation"] for m in full}
